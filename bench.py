@@ -3,7 +3,8 @@
 Prints ONE compact JSON line as the LAST stdout line: {"metric": ...,
 "value": total_sec, "unit": "sec", "queries": {name: sec}, "sf": ...,
 "std_ms": [per-query stddev in ms, aligned with "queries" key order]}.
-The full payload (plus "queries_std"/"queries_cold") goes to
+The full payload (plus "queries_std"/"queries_cold" and the session's
+"cpus"/"master"/"defaultParallelism") goes to
 $SPARK_GRAFT_BENCH_OUT (default .bench_full.json, gitignored) — the
 driver artifact keeps only the tail of stdout, so the stdout line must
 stay small (r5's full line overflowed it). Each query is executed to
@@ -193,6 +194,10 @@ def main() -> None:
         "queries_cold": cold,
         "queries_metrics": metrics,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        # the shape the session actually ran with, not the requested env
+        "cpus": spark._jvm.java.lang.Runtime.getRuntime().availableProcessors(),
+        "master": spark.sparkContext.master,
+        "defaultParallelism": spark.sparkContext.defaultParallelism,
     }
     # Full payload (with stddev + cold) to a side file — the driver keeps
     # only the LAST ~2000 chars of stdout, and r5's full line overflowed

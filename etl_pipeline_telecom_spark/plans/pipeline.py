@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import REGISTRY, register
 from ..functions.text import quality_score, token_pairs, tokens
-from ..sources import load_table
+from ..sources import load_table, read_parquet
 from .dedup import _DUP_OFFSET, corpus_with_dups, d5_lsh_jaccard_dedup
 from .similarity import v5_lsh_bucketed_neardup
 from .text import (
@@ -554,7 +554,7 @@ def p5_partitioned_sink_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.writers import stage_partitioned_events
 
     path = stage_partitioned_events(spark, sf_dir)
-    ev = spark.read.parquet(path)
+    ev = read_parquet(spark, path)
     dates = [F.lit(d).cast("date") for d in _P5_DATES]
     return (
         ev.where(F.col("event_date").isin(*dates))
@@ -716,7 +716,7 @@ def p7_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.writers import stage_bucketed_events
 
     path = stage_bucketed_events(spark, sf_dir, _P7_BUCKETS)
-    df = spark.read.parquet(path).select(
+    df = read_parquet(spark, path).select(
         "bucket", F.col("_metadata.file_name").alias("fname")
     )
     per_bucket = df.groupBy("bucket").agg(
@@ -823,7 +823,7 @@ def _p8_per_file_audit(spark: SparkSession, sf_dir: str, layout: str) -> DataFra
     from ..sources.writers import stage_zorder_events
 
     path = stage_zorder_events(spark, sf_dir, layout=layout)
-    df = spark.read.parquet(path).select(
+    df = read_parquet(spark, path).select(
         "t", "user_id", "zfile", F.col("_metadata.file_name").alias("fname")
     )
     return df.groupBy("zfile").agg(
@@ -1041,7 +1041,7 @@ def p9_bloom_file_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.writers import stage_zorder_events
 
     path = stage_zorder_events(spark, sf_dir, layout="linear")
-    staged = spark.read.parquet(path).select("zfile", "event_id")
+    staged = read_parquet(spark, path).select("zfile", "event_id")
     keys = staged.distinct()
     fm = keys.groupBy("zfile").agg(
         F.expr(
@@ -1174,14 +1174,14 @@ def p10_compaction_exec(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     staged = stage_bucketed_events(spark, sf_dir, _P10_BUCKETS)
     compacted = compact_bucketed_layout(spark, sf_dir, _P10_BUCKETS, _P10_BINS)
-    src = spark.read.parquet(staged).select(
+    src = read_parquet(spark, staged).select(
         "bucket", F.col("_metadata.file_name").alias("fname")
     )
     per_src = src.groupBy("bucket").agg(
         F.count(F.lit(1)).alias("n_rows_src"),
         F.countDistinct("fname").alias("n_src_files"),
     )
-    comp = spark.read.parquet(compacted).select(
+    comp = read_parquet(spark, compacted).select(
         "bin", "bucket", F.col("_metadata.file_name").alias("fname")
     )
     per_comp = comp.groupBy("bucket").agg(
@@ -1454,7 +1454,7 @@ def p11_incremental_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # file_path, not file_name: one task writing two leaf dirs reuses the
     # same part-file BASENAME in both (same partition id + job UUID)
-    src = spark.read.parquet(staged).select(
+    src = read_parquet(spark, staged).select(
         "bucket", F.col("_metadata.file_path").alias("fname")
     )
     per_src = src.groupBy("bucket").agg(
@@ -2141,7 +2141,7 @@ def _pipe5_run_stream(spark: SparkSession, sf_dir: str, state_dir: str, model=No
             scores.where(F.expr(f"(sb * 1000000) div nb <= {thr}")).select("doc_id"),
             "doc_id",
         ).cache()
-        state = spark.read.parquet(adm_path)
+        state = read_parquet(spark, adm_path)
         prior_fps = base_fps.union(state.select("fp")).distinct()
         ex = _pipe5_exact_survivors(g3, prior_fps).cache()
         sh_b = shingled_from_docs(docs.join(ex.select("doc_id"), "doc_id")).cache()
@@ -2258,7 +2258,7 @@ def _pipe5_audit(
     import os
 
     adm_state = (
-        spark.read.parquet(os.path.join(state_dir, "admitted"))
+        read_parquet(spark, os.path.join(state_dir, "admitted"))
         .select("slice_id", "doc_id")
         .cache()
     )
@@ -2961,7 +2961,7 @@ def p14_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.lit(sign) * mv_milli(F.col("value"))).cast("bigint").alias("dv"),
         )
 
-    base = spark.read.parquet(mv_dir).select(
+    base = read_parquet(spark, mv_dir).select(
         "event_type",
         F.col("n_rows").alias("dn"),
         F.col("v_milli_sum").alias("dv"),

@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 
 from ..catalog import register
-from ..sources import load_table
+from ..sources import load_table, read_parquet
 
 _SQL_QVEC = "list_transform(embedding, x -> round(CAST(x AS DOUBLE) * 1000))"
 _SQL_EMB = f"SELECT vec_id, label, {_SQL_QVEC} AS qv FROM embeddings"
@@ -1562,7 +1562,7 @@ def persisted_ivf_index(spark: SparkSession, sf_dir: str) -> str:
     work = f"{out_dir}.stage-{os.getpid()}-{time.monotonic_ns()}"
     cent.coalesce(1).write.parquet(os.path.join(work, "cent"))
     (
-        _v15_assign(base, spark.read.parquet(os.path.join(work, "cent")))
+        _v15_assign(base, read_parquet(spark, os.path.join(work, "cent")))
         .repartition("cid")
         .write.partitionBy("cid")
         .parquet(os.path.join(work, "assign"))
@@ -1587,7 +1587,7 @@ def staged_ivf_delta(spark: SparkSession, sf_dir: str, base_dir: str) -> str:
     _sweep_stale_stage_work("/tmp/spark_graft_v15_delta_")
     if os.path.isdir(out_dir):
         return out_dir
-    cent = spark.read.parquet(os.path.join(base_dir, "cent"))
+    cent = read_parquet(spark, os.path.join(base_dir, "cent"))
     new = _quantized(spark, sf_dir).where(F.col("vec_id") % _V15_NEW_MOD == 3)
     work = f"{out_dir}.stage-{os.getpid()}-{time.monotonic_ns()}"
     _v15_assign(new, cent).repartition("cid").write.partitionBy("cid").parquet(work)
@@ -1689,10 +1689,10 @@ def v15_incremental_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base_dir = persisted_ivf_index(spark, sf_dir)
     delta_dir = staged_ivf_delta(spark, sf_dir, base_dir)
-    cent = spark.read.parquet(os.path.join(base_dir, "cent"))
+    cent = read_parquet(spark, os.path.join(base_dir, "cent"))
     serving = _with_norm(
-        spark.read.parquet(os.path.join(base_dir, "assign"))
-        .unionByName(spark.read.parquet(delta_dir))
+        read_parquet(spark, os.path.join(base_dir, "assign"))
+        .unionByName(read_parquet(spark, delta_dir))
         .select("vec_id", "qv", F.col("cid").cast("int").alias("cid"))
     )
     emb = _with_norm(_quantized(spark, sf_dir))
@@ -1932,14 +1932,14 @@ def v16_index_rebuild_trigger(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base_dir = persisted_ivf_index(spark, sf_dir)
     delta_dir = staged_ivf_delta(spark, sf_dir, base_dir)
-    cent = spark.read.parquet(os.path.join(base_dir, "cent"))
+    cent = read_parquet(spark, os.path.join(base_dir, "cent"))
     base = (
-        spark.read.parquet(os.path.join(base_dir, "assign"))
+        read_parquet(spark, os.path.join(base_dir, "assign"))
         .select("vec_id", "qv", F.col("cid").cast("int").alias("cid"))
         .withColumn("is_new", F.lit(False))
     )
     delta = (
-        spark.read.parquet(delta_dir)
+        read_parquet(spark, delta_dir)
         .select("vec_id", "qv", F.col("cid").cast("int").alias("cid"))
         .withColumn("is_new", F.lit(True))
     )

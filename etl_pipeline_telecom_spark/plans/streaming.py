@@ -161,6 +161,7 @@ def st6_stream_maintained_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
     import os
 
+    from ..sources.readers import read_parquet
     from ..streaming import read_events_stream
     from ..streaming.jobs import maintain_hourly_rollup
 
@@ -175,7 +176,7 @@ def st6_stream_maintained_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = os.path.join("/tmp", f"spark_graft_st6_rollup_{key}")
     stream = read_events_stream(spark, sf_dir, glob="events.parquet")
     maintain_hourly_rollup(stream, out)
-    roll = spark.read.parquet(out)
+    roll = read_parquet(spark, out)
     return roll.select(
         F.col("window_start_us").cast("bigint").alias("window_start_us"),
         F.col("event_type").cast("string").alias("event_type"),
@@ -253,11 +254,12 @@ from .similarity import _SQL_EMB  # noqa: E402  (st8 shares v3's quantization)
     "oracle (st6's bounded-replay discipline applied to v3)",
 )
 def st8_stream_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..sources.readers import parquet_schema
     from ..streaming.jobs import replay_table_slices, run_available_now
     from .similarity import _quantized
 
     replay = replay_table_slices(sf_dir, "embeddings")
-    schema = spark.read.parquet(replay).schema
+    schema = parquet_schema(spark, replay)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)

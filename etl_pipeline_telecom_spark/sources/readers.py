@@ -7,7 +7,16 @@ table via PostgREST (``etl_analysis.ipynb cell4:6-10``). Here:
 - CSV scans take an explicit ``StructType`` (deterministic types; schema
   inference is a convenience flag, never the engine default) — S1.
 - Parquet is the primary columnar format for the synthetic fixture tables;
-  Catalyst pushes filters and prunes columns into the scan for free.
+  Catalyst pushes filters and prunes columns into the scan for free. Every
+  parquet scan without reader options (``mergeSchema``, ``basePath``) goes
+  through ``read_parquet``, which resolves a path's schema once per file
+  fingerprint and then reads with that explicit schema, so building a
+  query starts no footer-inference job. The cached schema is re-inferred
+  when any of these changes: the set of files under the path (or matched
+  by a ``pathGlobFilter`` glob), a file's inode, size or mtime (so a
+  rewritten or replaced file is seen), or one of the session confs that
+  change inferred parquet types (``_SCHEMA_CONFS``). The scan itself still
+  reads and type-checks every footer when it runs.
 - JDBC scan/count (S2/S4) replaces the REST fetch; note the reference's
   PostgREST read silently truncates at 1000 rows (SURVEY.md §4.3.7) — a
   bug we deliberately do not reproduce. In an environment with no JDBC
@@ -27,6 +36,7 @@ from __future__ import annotations
 
 import os
 from collections.abc import Callable, Iterable
+from fnmatch import fnmatchcase
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
@@ -45,9 +55,59 @@ FIXTURE_TABLES = (
 )
 
 
+# Session confs that change the types parquet schema inference produces.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+# (abspath, glob) -> ((fingerprint, confs), schema); one entry per path.
+# Process-wide on purpose: the key holds everything the inferred schema
+# depends on, so sessions can share entries. Two threads missing together
+# both infer and both store a schema valid for their key; no lock needed.
+_SCHEMAS: dict[tuple[str, str | None], tuple[tuple, StructType]] = {}
+
+
+def _fingerprint(root: str, glob: str | None) -> tuple:
+    """``(relpath, st_ino, st_size, st_mtime_ns)`` of every local file under
+    ``root`` whose name matches ``glob`` (every file when ``glob`` is None)."""
+    if os.path.isfile(root):
+        walk: Iterable = [(os.path.dirname(root), [], [os.path.basename(root)])]
+    else:
+        walk = os.walk(root)
+    out = []
+    for d, dirs, files in walk:
+        dirs.sort()
+        for f in sorted(files):
+            if glob is None or fnmatchcase(f, glob):
+                p = os.path.join(d, f)
+                st = os.stat(p)
+                out.append((os.path.relpath(p, root), st.st_ino, st.st_size, st.st_mtime_ns))
+    return tuple(out)
+
+
+def parquet_schema(spark: SparkSession, path: str, glob: str | None = None) -> StructType:
+    """The schema ``spark.read.parquet(path)`` infers, run once per file
+    fingerprint and schema conf set. ``glob`` is the read's
+    ``pathGlobFilter``; only the files it matches are fingerprinted."""
+    root = os.path.abspath(path)
+    key = (_fingerprint(root, glob), tuple(spark.conf.get(k, None) for k in _SCHEMA_CONFS))
+    hit = _SCHEMAS.get((root, glob))
+    if hit is not None and hit[0] == key:
+        return hit[1]
+    reader = spark.read if glob is None else spark.read.option("pathGlobFilter", glob)
+    schema = reader.parquet(path).schema
+    _SCHEMAS[(root, glob)] = (key, schema)
+    return schema
+
+
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """Columnar scan; pushdown + pruning handled by the parquet source."""
-    return spark.read.parquet(path)
+    """Columnar scan with the path's resolved schema (``parquet_schema``);
+    pushdown + pruning handled by the parquet source. Each call returns a
+    fresh relation, so self-joins get distinct expression IDs."""
+    return spark.read.schema(parquet_schema(spark, path)).parquet(path)
 
 
 def read_csv(
@@ -89,7 +149,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # DRIVER may hand us a session without it, and TIMESTAMP(NANOS)
         # parquet throws PARQUET_TYPE_ILLEGAL otherwise; it is runtime-settable
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
         ts_type = df.schema["ts"].dataType
         if isinstance(ts_type, LongType):

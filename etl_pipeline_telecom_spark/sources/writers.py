@@ -22,6 +22,8 @@ import shutil
 
 from pyspark.sql import DataFrame
 
+from .readers import read_parquet
+
 
 def _stage_key(src: str, tag: str) -> str:
     """Cache key for a staged layout derived from ``src``.
@@ -353,7 +355,7 @@ def compact_bucketed_layout(
     if os.path.isdir(out_dir):
         return out_dir
     per = (
-        spark.read.parquet(staged)
+        read_parquet(spark, staged)
         .groupBy("bucket")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy("bucket")
@@ -452,7 +454,7 @@ def incremental_compact_fragments(
     if os.path.isdir(out_dir):
         return out_dir
     per = (
-        spark.read.parquet(staged)
+        read_parquet(spark, staged)
         # file_path, not file_name: one task writing two leaf dirs reuses
         # the same part-file basename in both
         .select("bucket", F.col("_metadata.file_path").alias("f"))

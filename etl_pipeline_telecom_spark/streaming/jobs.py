@@ -404,8 +404,9 @@ def maintain_contamination_bloom(
     import numpy as np
 
     from ..plans.dedup import _BLOOM_WORDS, _build_bloom, shingled_from_docs
+    from ..sources.readers import parquet_schema
 
-    schema = spark.read.parquet(replay_dir).schema
+    schema = parquet_schema(spark, replay_dir)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -526,6 +527,7 @@ def run_restart_exactly_once(
 
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
+    from ..sources.readers import read_parquet
     from .source import read_events_stream
 
     replay = replay_dir_with_sentinels(sf_dir)
@@ -593,4 +595,4 @@ def run_restart_exactly_once(
                 spark.conf.set("spark.sql.shuffle.partitions", saved)
         with open(done, "w") as fh:
             fh.write("ok")
-    return spark.read.parquet(data_dir)
+    return read_parquet(spark, data_dir)

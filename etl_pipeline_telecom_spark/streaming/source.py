@@ -12,8 +12,10 @@ generations (see ``sources.readers.load_table``): TIMESTAMP(NANOS)
 TIMESTAMP(MICROS, isAdjustedToUTC=false) (TIMESTAMP_NTZ). A streaming
 reader must declare its schema up front, so we sniff the dtype with a
 driver-side batch schema probe of the same directory (footer-only, no
-scan) and pick the matching schema + conversion. Either way the stream
-carries a session-TZ (UTC) TIMESTAMP with the file's wall clock.
+scan; resolved once per fingerprint of the files the glob matches, see
+``sources.readers.parquet_schema``) and pick the matching schema +
+conversion. Either way the stream carries a session-TZ (UTC) TIMESTAMP
+with the file's wall clock.
 """
 
 from __future__ import annotations
@@ -23,6 +25,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, TimestampNTZType
+
+from ..sources.readers import parquet_schema
 
 
 def _resolve_table_layout(directory: str, glob: str) -> tuple[str, str]:
@@ -44,8 +48,7 @@ def _resolve_table_layout(directory: str, glob: str) -> tuple[str, str]:
 def _events_ts_kind(spark: SparkSession, directory: str, glob: str) -> str:
     """'nanos_long' | 'ntz' | 'ltz' — from a footer-only batch schema probe."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    probe = spark.read.option("pathGlobFilter", glob).parquet(directory)
-    t = probe.schema["ts"].dataType
+    t = parquet_schema(spark, directory, glob)["ts"].dataType
     if isinstance(t, LongType):
         return "nanos_long"
     if isinstance(t, TimestampNTZType):

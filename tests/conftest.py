@@ -19,3 +19,15 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture
+def bare_spark(spark):
+    """A session without our factory's nanos conf, as a caller may hand us.
+
+    ``newSession()`` shares the SparkContext but gets an independent
+    SQLConf, so unsetting the conf there simulates the bare session.
+    """
+    bare = spark.newSession()
+    bare.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+    return bare

@@ -1,9 +1,6 @@
 """The engine must work on a caller-provided SparkSession without our
-factory's config — the driver constructs its own session.
-
-``newSession()`` shares the SparkContext but gets an independent SQLConf,
-so unsetting the nanos conf there simulates the bare driver session.
-"""
+factory's config — a caller may construct its own session (``bare_spark``
+in conftest)."""
 
 from __future__ import annotations
 
@@ -12,18 +9,14 @@ from etl_pipeline_telecom_spark.streaming import read_events_stream
 from etl_pipeline_telecom_spark.streaming.jobs import run_available_now
 
 
-def test_events_load_on_bare_session(spark, sf_dir):
-    bare = spark.newSession()
-    bare.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-    ev = load_table(bare, sf_dir, "events")
+def test_events_load_on_bare_session(bare_spark, sf_dir):
+    ev = load_table(bare_spark, sf_dir, "events")
     assert ev.schema["ts"].dataType.simpleString() == "timestamp"
     assert ev.count() > 0
 
 
-def test_events_stream_on_bare_session(spark, sf_dir):
-    bare = spark.newSession()
-    bare.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-    stream = read_events_stream(bare, sf_dir, glob="events.parquet")
+def test_events_stream_on_bare_session(bare_spark, sf_dir):
+    stream = read_events_stream(bare_spark, sf_dir, glob="events.parquet")
     out, _ = run_available_now(
         stream.groupBy("event_type").count(), output_mode="complete"
     )

@@ -8,19 +8,35 @@ flaky transports to pin the reference's batch/retry/abort semantics
 
 from __future__ import annotations
 
+import csv
 import glob
 import json
 import os
 
 import pytest
 
-from etl_pipeline_telecom_spark.plans.churn import read_raw, transform_churn
+from etl_pipeline_telecom_spark.plans.churn import RAW_COLUMNS, read_raw, transform_churn
 from etl_pipeline_telecom_spark.sources import RestSchemaError, write_rest_batched
 from etl_pipeline_telecom_spark.sources.rest_sink import _post_with_retry
 from etl_pipeline_telecom_spark.sources.writers import write_with_fallback
 from etl_pipeline_telecom_spark.validation import churn_expectations, run_expectations
 
-RAW_CSV = "/root/reference/data/raw/WA_Fn-UseC_-Telco-Customer-Churn.csv"
+# 40 raw churn-shaped rows (FIXTURES.md A.3), so the suite needs no
+# reference checkout; test_churn_fixture_covers_edge_cases pins their shape
+RAW_CSV = os.path.join(os.path.dirname(__file__), "fixtures", "telco_churn_raw.csv")
+
+
+def test_churn_fixture_covers_edge_cases():
+    with open(RAW_CSV, newline="") as fh:
+        rows = list(csv.DictReader(fh))
+    assert list(rows[0]) == [n for n, _ in RAW_COLUMNS]
+    blanks = [r for r in rows if r["TotalCharges"] == " "]
+    assert len(blanks) == 11 and {r["tenure"] for r in blanks} == {"0"}
+    tenures = {int(r["tenure"]) for r in rows}
+    assert {12, 13, 36, 37, 60, 61} <= tenures
+    charges = {float(r["MonthlyCharges"]) for r in rows}
+    assert {29.95, 30.0, 70.0, 70.05} <= charges
+    assert {r["Contract"] for r in rows} == {"Month-to-month", "One year", "Two year"}
 
 
 def test_churn_validation_all_pass(spark):
